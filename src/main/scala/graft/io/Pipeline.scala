@@ -1,13 +1,22 @@
 package graft.io
 
 import graft.ops.IntervalExpand
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
+import java.time.LocalDate
 
 /** The reference's end-to-end batch job (entry point A, SURVEY §3.1),
   * re-expressed: discover the newest dated CSV -> densify intervals ->
   * write parquet. The orchestration contract (monthly trigger, .sync
   * retry semantics, bookmarks) reduces to: run() either completes or
   * throws — exit codes replace Step Functions states.
+  *
+  * Both entry points commit through one per-date step (`commit`): read
+  * the date's files, densify once, write. The row count is observed on the
+  * write itself (`Dataset.observe`), so a commit is a single Spark job with
+  * nothing cached.
   */
 object Pipeline {
 
@@ -19,24 +28,12 @@ object Pipeline {
     */
   def run(spark: SparkSession, sourceDir: String, targetDir: String,
           strict: Boolean = false, idempotent: Boolean = true): Long = {
-    val files = Sources.listFiles(spark, sourceDir)
-    val latest = Sources.latestByFilenameDate(files).getOrElse {
+    val latest = Sources.latestByFilenameDate(Sources.listFiles(spark, sourceDir)).getOrElse {
       // Q1/Q2 decision: fail fast, no silent fallback to a hardcoded file.
-      throw new IllegalStateException(
-        s"no dated CSV (yyyyMMdd_*.csv) found under $sourceDir")
+      throw new IllegalStateException(s"no dated CSV (yyyyMMdd_*.csv) found under $sourceDir")
     }
-    val readings = Sources.readCsv(spark, latest)
-    val expanded =
-      if (strict) IntervalExpand.strict(readings)
-      else IntervalExpand.faithful(readings)
-    val out = expanded.cache()
-    val n = out.count()
-    val ingestDate = Sources.filenameDate(
-      new org.apache.hadoop.fs.Path(latest).getName).get.toString
-    if (idempotent) Sinks.writeIdempotent(out, targetDir, ingestDate)
-    else Sinks.writeAppend(out, targetDir)
-    out.unpersist()
-    n
+    val ingestDate = Sources.filenameDate(new Path(latest).getName).get
+    commit(spark, Seq(latest), ingestDate, targetDir, strict, idempotent)
   }
 
   /** Step Functions `.sync` retry-or-fail analogue (the reference's state
@@ -79,11 +76,10 @@ object Pipeline {
   def runIncremental(spark: SparkSession, sourceDir: String, targetDir: String,
                      ledgerDir: String, strict: Boolean = false): (Seq[String], Long) = {
     val done = Ledger.processed(spark, ledgerDir)
+    val doneByDate = datedFiles(done.toSeq.sorted).groupMap(_._1)(_._2)
     // Listing paths go through the same normalization as ledger entries, so
     // the processed-set compare never misses on qualification drift.
-    val pending = Sources.listFiles(spark, sourceDir)
-      .map(Ledger.normalize(spark, _))
-      .flatMap(f => Sources.filenameDate(new org.apache.hadoop.fs.Path(f).getName).map(_ -> f))
+    val pending = datedFiles(Sources.listFiles(spark, sourceDir).map(Ledger.normalize(spark, _)))
       .filterNot { case (_, f) => done.contains(f) }
     // Group by date: files sharing a yyyyMMdd prefix land in the SAME
     // ingest_date partition, and the overwrite-by-partition sink would
@@ -100,25 +96,34 @@ object Pipeline {
       // per-partition contract, not per-file). A recorded file that has
       // vanished from the source is a loud error — rebuilding without it
       // would silently drop its rows from the partition.
-      val priorSameDate = done.toSeq.sorted.filter(p =>
-        Sources.filenameDate(new org.apache.hadoop.fs.Path(p).getName).contains(date))
+      val priorSameDate = doneByDate.getOrElse(date, Nil)
       priorSameDate.foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
+        val path = new Path(p)
         val pfs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!pfs.exists(path)) throw new IllegalStateException(
           s"cannot rebuild ingest_date=$date: previously processed file $p " +
           "is gone; partition overwrite would silently drop its rows")
       }
-      val files = priorSameDate ++ newFiles
-      val readings = files.map(Sources.readCsv(spark, _)).reduce(_ unionByName _)
-      val expanded =
-        (if (strict) IntervalExpand.strict(readings)
-         else IntervalExpand.faithful(readings)).cache()
-      rows += expanded.count()
-      Sinks.writeIdempotent(expanded, targetDir, date.toString)
+      rows += commit(spark, priorSameDate ++ newFiles, date, targetDir, strict, idempotent = true)
       Ledger.record(spark, ledgerDir, newFiles)
-      expanded.unpersist()
     }
     (byDate.flatMap(_._2.map(_._2)), rows)
+  }
+
+  private def datedFiles(files: Seq[String]): Seq[(LocalDate, String)] =
+    files.flatMap(f => Sources.filenameDate(new Path(f).getName).map(_ -> f))
+
+  /** One date's commit: union `files`, densify, and write them as the
+    * `ingest_date` partition (or append, when not `idempotent`). Returns
+    * the rows written, counted by an observation on the write's own pass. */
+  private def commit(spark: SparkSession, files: Seq[String], ingestDate: LocalDate,
+                     targetDir: String, strict: Boolean, idempotent: Boolean): Long = {
+    val readings = files.map(Sources.readCsv(spark, _)).reduce(_ unionByName _)
+    val expanded = if (strict) IntervalExpand.strict(readings) else IntervalExpand.faithful(readings)
+    val written = Observation()
+    val out = expanded.observe(written, count(lit(1)).as("rows"))
+    if (idempotent) Sinks.writeIdempotent(out, targetDir, ingestDate.toString)
+    else Sinks.writeAppend(out, targetDir)
+    written.get("rows").asInstanceOf[Long]
   }
 }

@@ -1,12 +1,14 @@
 package graft
 
 import graft.io.{Pipeline, Sinks, Sources}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Minutes, Span}
 
 import java.nio.file.{Files, Paths}
 
 /** End-to-end pipeline tests: latest-file selection (Q9 anchored rule),
   * fail-fast on empty input (Q1/Q2), idempotent re-run (Q8). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TimeLimits {
 
   private def mkSource(): String = {
     val dir = Files.createTempDirectory(Paths.get("target"), "pipe_src").toString
@@ -123,6 +125,50 @@ class PipelineSpec extends SparkSpec {
     Files.delete(Paths.get(dir, "20231001_station_a.csv"))
     intercept[IllegalStateException] {
       Pipeline.runIncremental(spark, dir, out, ledger)
+    }
+  }
+
+  test("returned row count is the rows written: run and runIncremental, faithful and strict") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "pipe_rowcount").toString
+    def write(name: String, rows: String*): Unit =
+      Files.write(Paths.get(dir, name),
+        ("start_time,end_time,samples,temperature" +: rows).mkString("\n").getBytes)
+    def partitionRows(out: String, date: String): Long = {
+      val p = Paths.get(out, s"ingest_date=$date")
+      if (Files.exists(p)) spark.read.parquet(p.toString).count() else 0L
+    }
+    write("20230601_measurement_data.csv", "2023-06-01 00:00:00,2023-06-01 00:00:10,2,20.0")
+    write("20230702_measurement_data.csv",
+      "2023-07-02 00:00:00,2023-07-02 00:00:30,3,21.5",
+      "2023-07-02 01:00:00,2023-07-02 01:00:10,0,22.0", // Q3
+      "2023-07-02 02:00:00,2023-07-02 02:00:10,,23.0") // Q4: samples NULL
+    // faithful: 3 + 2 bogus Q3 rows + 0 (Q4); strict: 3
+    for ((strict, newest) <- Seq(false -> 5L, true -> 3L)) {
+      val out = s"${dir}_run_$strict"
+      assert(Pipeline.run(spark, dir, out, strict = strict) == newest)
+      assert(partitionRows(out, "2023-07-02") == newest)
+      val appended = s"${dir}_append_$strict"
+      assert(Pipeline.run(spark, dir, appended, strict = strict, idempotent = false) == newest)
+      assert(spark.read.parquet(appended).count() == newest)
+      val inc = s"${dir}_inc_$strict"
+      val (files, rows) = Pipeline.runIncremental(spark, dir, inc, inc + "_ledger", strict = strict)
+      assert(files.size == 2 && rows == 2 + newest)
+      assert(partitionRows(inc, "2023-06-01") == 2 && partitionRows(inc, "2023-07-02") == newest)
+    }
+    // a header-only newest file writes and returns 0 rows, without hanging
+    write("20230803_measurement_data.csv")
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(Span(3, Minutes)) {
+      for (strict <- Seq(false, true)) {
+        val out = s"${dir}_run_$strict"
+        assert(Pipeline.run(spark, dir, out, strict = strict) == 0)
+        assert(partitionRows(out, "2023-08-03") == 0)
+        val inc = s"${dir}_inc_$strict"
+        val (files, rows) = Pipeline.runIncremental(spark, dir, inc, inc + "_ledger", strict = strict)
+        assert(files.map(f => f.substring(f.lastIndexOf('/') + 1)) ==
+          Seq("20230803_measurement_data.csv") && rows == 0)
+        assert(partitionRows(inc, "2023-08-03") == 0)
+      }
     }
   }
 
